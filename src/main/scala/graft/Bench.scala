@@ -36,6 +36,19 @@ import org.apache.spark.sql.SparkSession
   * protocol.
   */
 object Bench {
+  /** `SPARK_GRAFT_CONF="k=v;k2=v2"` entries as (key, value) pairs. Keys
+    * and values are trimmed and empty entries skipped; an entry without
+    * `=`, or with an empty key, fails loudly instead of being dropped.
+    */
+  def parseConf(raw: String): Seq[(String, String)] =
+    raw.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      require(i >= 0, s"SPARK_GRAFT_CONF entry has no '=': '$kv'")
+      val k = kv.substring(0, i).trim
+      require(k.nonEmpty, s"SPARK_GRAFT_CONF entry has an empty key: '$kv'")
+      k -> kv.substring(i + 1).trim
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -68,17 +81,13 @@ object Bench {
       // session confs come from SPARK_GRAFT_CONF="k=v;k2=v2" so a cluster
       // deployment (or a config experiment) can override without touching
       // the measured local defaults above.
-      sys.env.get("SPARK_GRAFT_CONF").toSeq
-        .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-        .foreach { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          b = b.config(k, v)
-        }
+      sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(parseConf)
+        .foreach { case (k, v) => b = b.config(k, v) }
       val s = b.withExtensions(new GraftExtensions).getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       // Warm the JVM/codegen/file-source paths once so the first
       // measured query doesn't absorb session startup cost.
-      s.read.parquet(s"$sfDir/lineitem.parquet").limit(10).count()
+      Tables.lineitem(s, sfDir).limit(10).count()
       s.range(1000).selectExpr("sum(id)").count()
       s
     }

@@ -8,7 +8,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *
   * Every operator takes the scale-factor directory explicitly so the same
   * plan runs unchanged from sf0.001 smoke tests up to a 100 TB lake — the
-  * parquet scans are plain `spark.read.parquet`, so partition pruning,
+  * parquet scans go through [[graft.sources.Sinks.readParquet]] (a plain
+  * parquet relation whose schema is read from the footer on the driver,
+  * so loading a table starts no Spark job), and partition pruning,
   * predicate pushdown and column pruning all apply (verify with
   * `.explain("formatted")`: PushedFilters / ReadSchema).
   */
@@ -33,7 +35,7 @@ object Tables {
     *
     * The `spark.sql.legacy.parquet.nanosAsLong` conf is set at session
     * build time by every in-repo builder (Verify / Bench / SparkSpec /
-    * Probe / PlanDump) — a loader should not unconditionally mutate
+    * PlanDump) — a loader should not unconditionally mutate
     * session-global conf as a side effect of planning. For sessions
     * built OUTSIDE this library (a user's spark-shell driving the
     * operators), a defensive set-if-unset keeps nanos-precision files
@@ -101,7 +103,7 @@ object Tables {
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sinks.readParquet(spark, s"$dir/$name.parquet")
 
   /** Size-guarded broadcast hint for SF-PROPORTIONAL dimensions
     * (part / customer / supplier — tables that grow linearly with the

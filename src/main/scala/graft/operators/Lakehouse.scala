@@ -973,7 +973,8 @@ object Lakehouse {
         case "customer" => graft.Tables.customer(spark, dir)
         case "orders" => graft.Tables.orders(spark, dir)
         case "lineitem" => graft.Tables.lineitem(spark, dir)
-        case other => spark.read.parquet(s"$dir/$other.parquet")
+        case other =>
+          graft.sources.Sinks.readParquet(spark, s"$dir/$other.parquet")
       }
       val strMass =
         if (strs.isEmpty) lit(0L)

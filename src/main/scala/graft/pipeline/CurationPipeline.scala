@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.Tables
 import graft.operators.{Coreset, Dedup, Sampling, TextAnalysis}
+import graft.sources.Sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,7 +72,7 @@ object CurationPipeline {
       // profile, read straight off a production run's manifest instead
       // of re-deriving it from scheduler logs.
       manifest += s"${name}_millis" -> (System.nanoTime() - t0) / 1000000L
-      (spark.read.parquet(path), metrics)
+      (Sinks.readParquet(spark, path), metrics)
     }
     def stage(name: String, df: DataFrame): DataFrame =
       stageWith(name, df, Nil)._1
@@ -190,7 +191,7 @@ object CurationPipeline {
       corpusDocs: DataFrame, batch: DataFrame,
       precomputedBands: Option[DataFrame] = None): DataFrame = {
     import graft.functions.TextOps
-    val index = spark.read.parquet(indexPath)
+    val index = Sinks.readParquet(spark, indexPath)
       .select(col("doc_id").as("indexed_doc"), col("band_key"))
     // callers that already banded the batch (the rolling ingestion bands
     // once per micro-batch) pass the frame in; re-banding here would

@@ -87,17 +87,16 @@ object PublicationsPipeline {
 
   /** Full run: stage outputs land under outDir/stageN_* as parquet; each
     * stage reads its upstream's STAGED output. Returns row counts per
-    * staged table (the pipeline's run manifest).
+    * staged table (the pipeline's run manifest), each observed on its
+    * stage's write.
     */
   def runAll(spark: SparkSession, dataDir: String, outDir: String,
       fetchUri: Option[String] = None): Map[String, Long] = {
     val manifest = scala.collection.mutable.LinkedHashMap[String, Long]()
     def stage(name: String, df: DataFrame): DataFrame = {
       val path = s"$outDir/$name"
-      df.write.mode("overwrite").parquet(path)
-      val staged = spark.read.parquet(path)
-      manifest += name -> staged.count()
-      staged
+      manifest += name -> Sinks.writeParquet(df, path)
+      Sinks.readParquet(spark, path)
     }
 
     // Stage 1: ingest raw sources into the staging area. With a
@@ -136,8 +135,8 @@ object PublicationsPipeline {
     stage("stage6_institution_collab", Analytics.institutionCollab(spark, dataDir))
 
     // check_DWH analog: referential sanity between fact and dim.
-    val fact = spark.read.parquet(s"$outDir/stage4_fact_sales")
-    val dim = spark.read.parquet(s"$outDir/stage4_dim_customer")
+    val fact = Sinks.readParquet(spark, s"$outDir/stage4_fact_sales")
+    val dim = Sinks.readParquet(spark, s"$outDir/stage4_dim_customer")
     val orphans = fact.join(dim, fact("customer_key") === dim("customer_key"), "left_anti")
     manifest += "check_orphan_fact_rows" -> orphans.count()
 
@@ -184,15 +183,13 @@ object PublicationsPipeline {
         AllSuccess)(df: => DataFrame): TaskDef =
       TaskDef(name, upstream, retries = 1, rule = rule,
         skipIf = () => resume && exists(name)) { () =>
-        val path = s"$outDir/$name"
-        df.write.mode("overwrite").parquet(path)
-        manifest += name -> spark.read.parquet(path).count()
+        manifest += name -> Sinks.writeParquet(df, s"$outDir/$name")
       }
     val tasks = Seq(
       staged("stage1_documents", Nil)(Tables.documents(spark, dataDir)),
       staged("stage1_orders", Nil)(Tables.orders(spark, dataDir)),
       staged("stage2_cleaned_documents", Seq("stage1_documents"))(
-        clean(spark.read.parquet(s"$outDir/stage1_documents"))),
+        clean(Sinks.readParquet(spark, s"$outDir/stage1_documents"))),
       staged("stage3_enriched_orders",
         Seq("stage2_cleaned_documents", "stage1_orders"))(
         enrich(spark, dataDir)),
@@ -223,7 +220,7 @@ object PublicationsPipeline {
       // statements.cypher are the complete, replayable load artifact.
       TaskDef("stage7_graph_load", Seq("stage5_collab_graph"), retries = 1,
         skipIf = () => resume && exists("stage7_graph_load")) { () =>
-        val edges = spark.read.parquet(s"$outDir/stage5_collab_graph")
+        val edges = Sinks.readParquet(spark, s"$outDir/stage5_collab_graph")
         val nodes = Tables.supplier(spark, dataDir)
           .select(col("s_suppkey").cast("long").as("supp_id"),
             col("s_name").as("name"))
@@ -239,22 +236,23 @@ object PublicationsPipeline {
       TaskDef("check_orphan_fact_rows",
         Seq("stage4_fact_sales", "stage4_dim_customer"),
         retries = 1, rule = AllDone) { () =>
-        val fact = spark.read.parquet(s"$outDir/stage4_fact_sales")
-        val dim = spark.read.parquet(s"$outDir/stage4_dim_customer")
+        val fact = Sinks.readParquet(spark, s"$outDir/stage4_fact_sales")
+        val dim = Sinks.readParquet(spark, s"$outDir/stage4_dim_customer")
         manifest += "check_orphan_fact_rows" -> fact.join(dim,
           fact("customer_key") === dim("customer_key"), "left_anti").count()
       })
     val report = Orchestrator.run(tasks, onRetry)
-    // Resumed stages never ran their body, but their staged data IS the
-    // state — fill their manifest counts from the staging area so the
-    // resumed run's manifest matches a fresh run's.
+    // Resumed stages never ran their body (no write, so no observed
+    // count), but their staged data IS the state — fill their manifest
+    // counts by reading the staging area so the resumed run's manifest
+    // matches a fresh run's.
     report.states.foreach {
       case (name, Orchestrator.Resumed) if exists(name) =>
         manifest += name -> (if (name == "stage7_graph_load")
           // JSONL staging, not parquet: count the staged payload lines
           spark.read.textFile(s"$outDir/$name/suppliers",
             s"$outDir/$name/collab_edges").count()
-        else spark.read.parquet(s"$outDir/$name").count())
+        else Sinks.readParquet(spark, s"$outDir/$name").count())
       case _ => ()
     }
     (report, manifest.toMap)
@@ -270,7 +268,8 @@ object PublicationsPipeline {
     *     without touching the rest of the table — the overwrite path
     *     above would clobber everything not in the batch.
     * `batchFilter` scopes the run to a slice (the Airflow backfill
-    * window analog); identity = full refresh.
+    * window analog); identity = full refresh. Each table's count is the
+    * one its upsert observed on the committed write.
     */
   def upsertWarehouse(spark: SparkSession, dataDir: String, outDir: String,
       batchFilter: DataFrame => DataFrame = identity): Map[String, Long] = {
@@ -282,9 +281,7 @@ object PublicationsPipeline {
       ("wh_collab_edges", Analytics.collabPairs(spark, dataDir),
         Seq("supp_a", "supp_b")))
     tables.map { case (name, df, keys) =>
-      val path = s"$outDir/$name"
-      Sinks.upsertParquet(batchFilter(df), path, keys)
-      name -> spark.read.parquet(path).count()
+      name -> Sinks.upsertParquet(batchFilter(df), s"$outDir/$name", keys)
     }.toMap
   }
 }

@@ -64,7 +64,7 @@ object AnnIndex {
     // way of pruning. Bucket ids are < 2^planes, far inside int range.
     val probedBuckets = probes.select(col("bucket")).distinct()
       .collect().map(_.getLong(0).toInt)
-    val cand = spark.read.parquet(indexPath)
+    val cand = Sinks.readParquet(spark, indexPath)
       .filter(col("bucket").isin(probedBuckets: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
         col("bucket").cast("long").as("bucket"))

@@ -156,7 +156,7 @@ object Ingest {
     Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("ts"), col("value"), col("event_type"))
       .write.mode("overwrite").partitionBy("event_type").parquet(stage)
-    spark.read.parquet(stage)
+    Sinks.readParquet(spark, stage)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
       .agg(
@@ -267,7 +267,7 @@ object Ingest {
       .repartitionByRange(nParts, col("z"))
       .sortWithinPartitions(col("z"))
       .write.mode("overwrite").parquet(stage)
-    spark.read.parquet(stage)
+    Sinks.readParquet(spark, stage)
       .filter(col("user_bucket") < 64 && col("day_bucket").between(16, 31))
       .groupBy(col("user_bucket"))
       .agg(

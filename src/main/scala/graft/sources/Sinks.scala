@@ -37,9 +37,94 @@ object Sinks {
       props: java.util.Properties): Unit =
     df.write.mode(SaveMode.Append).jdbc(url, table, props)
 
-  /** Round-trip helper used by specs. */
+  /** graft's one parquet table reader — every parquet table read in the
+    * library goes through here.
+    *
+    * `spark.read.parquet` infers the schema by launching a one-task
+    * Spark job that reads one footer (`ParquetUtils.inferSchema` →
+    * `mergeSchemasInParallel`): a fixed scheduling cost paid on every
+    * table load, dominant at interactive scale. This reader reads that
+    * same footer on the driver instead ([[footerSchema]]) and hands the
+    * schema to `spark.read.schema(s).parquet(path)`, which starts no
+    * job. Wherever the inference is not a one-footer read — schema
+    * merging on, summary files, partition/bucket subdirectories, no
+    * non-empty data file, a missing path or glob, an unreadable footer —
+    * it falls back to plain `spark.read.parquet`, so Spark's own
+    * behaviour and errors stay unchanged there.
+    */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema `spark.read.parquet(path)` infers when schema merging is
+    * off — derived exactly like Spark's `ParquetFileFormat
+    * .readSchemaFromFooter` from the first data file in path order (the
+    * file Spark's inference touches): the Spark row-metadata schema if
+    * the file carries one, else the footer's parquet schema through a
+    * `ParquetToSparkSchemaConverter` built from the session conf the
+    * way `mergeSchemasInParallel` builds it (binary-as-string, INT96,
+    * NTZ inference, nanosAsLong, unknown-type annotations). `None` for
+    * every layout where Spark's inference reads anything else.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    // the names Spark's file listing skips (HadoopFSUtils
+    // .shouldFilterOutPathName); summary files are listed but fall back
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_")
+    def summary(name: String): Boolean =
+      name.startsWith("_metadata") || name.startsWith("_common_metadata")
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    // a missing path — or a glob, which lists as missing — falls back
+    val listed: Seq[FileStatus] =
+      try root.getFileSystem(hadoopConf).listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => return None }
+    val (dirs, files) = listed.filterNot(s => hidden(s.getPath.getName))
+      .partition(_.isDirectory)
+    if (dirs.nonEmpty || listed.exists(s => summary(s.getPath.getName)))
+      return None
+    files.sortBy(_.getPath.toString).headOption.filter(_.getLen > 0)
+      .flatMap { first =>
+        // an unreadable footer or an unconvertible schema (nanos without
+        // nanosAsLong) falls back too: Spark then raises (or, under
+        // ignoreCorruptFiles, skips) it the way it always has
+        scala.util.Try(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(first.getPath, ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(first, hadoopConf),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+          new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation =
+              conf.parquetReaderRespectUnknownTypeAnnotation))).toOption
+      }
+  }
+
+  /** Overwrite `path` with `df` and return the row count written,
+    * observed on the write job itself (`Dataset.observe`): no second
+    * job re-reads the table to count it.
+    */
+  def writeParquet(df: DataFrame, path: String): Long = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite).parquet(path)
+    obs.get("rows").asInstanceOf[Long]
+  }
 
   /** Read a swap-managed table if it exists, RECOVERING an interrupted
     * swap first. Any reader that probes existence of a table the swap
@@ -53,7 +138,7 @@ object Sinks {
       : Option[DataFrame] = {
     recoverSwap(spark, path)
     val (fs, target) = fsFor(spark, path)
-    if (fs.exists(target)) Some(spark.read.parquet(path)) else None
+    if (fs.exists(target)) Some(readParquet(spark, path)) else None
   }
 
   /** Atomic full-table REPLACE with the same staging-swap + recovery
@@ -63,7 +148,7 @@ object Sinks {
     */
   def replaceParquet(df: DataFrame, path: String): Unit = {
     recoverSwap(df.sparkSession, path)
-    commitSwap(df, path)
+    commitSwap(df, path): Unit
   }
 
   /** Idempotent MERGE into a parquet table — the lake-path analog of the
@@ -88,8 +173,11 @@ object Sinks {
     * restriction never triggers. (A format with transactional MERGE —
     * Delta/Iceberg — replaces this whole method with one call; plain
     * parquet is what this container has.)
+    *
+    * Returns the committed table's row count, observed on the staged
+    * write — callers never re-read the table to count it.
     */
-  def upsertParquet(df: DataFrame, path: String, keys: Seq[String]): Unit = {
+  def upsertParquet(df: DataFrame, path: String, keys: Seq[String]): Long = {
     import org.apache.spark.sql.functions.{col, max, struct}
     val spark = df.sparkSession
     val nonKey = df.columns.filterNot(keys.contains)
@@ -103,7 +191,7 @@ object Sinks {
     val (fs, target) = fsFor(spark, path)
     val merged =
       if (fs.exists(target))
-        spark.read.parquet(path).join(batch, keys, "left_anti")
+        readParquet(spark, path).join(batch, keys, "left_anti")
           .unionByName(batch)
       else batch
     commitSwap(merged, path)
@@ -147,20 +235,22 @@ object Sinks {
     * cannot-overwrite-a-path-being-read restriction never triggers. (On
     * HDFS this is the same rename-commit pattern FileOutputCommitter v1
     * uses; the crash window between the two renames is covered by
-    * [[recoverSwap]] on the next mutation.)
+    * [[recoverSwap]] on the next mutation.) Returns the committed row
+    * count, observed on the staged write.
     */
-  private def commitSwap(merged: DataFrame, path: String): Unit = {
+  private def commitSwap(merged: DataFrame, path: String): Long = {
     val spark = merged.sparkSession
     val (fs, target) = fsFor(spark, path)
     val staging = new org.apache.hadoop.fs.Path(path + ".staging")
-    merged.write.mode(SaveMode.Overwrite).parquet(path + ".staging")
+    val rows = writeParquet(merged, path + ".staging")
     val old = new org.apache.hadoop.fs.Path(path + ".old")
     fs.delete(old, true)
     if (fs.exists(target) && !fs.rename(target, old))
       throw new java.io.IOException(s"cannot stage out old table at $path")
     if (!fs.rename(staging, target))
       throw new java.io.IOException(s"cannot commit staged table at $staging")
-    fs.delete(old, true): Unit
+    fs.delete(old, true)
+    rows
   }
 
   /** SCD2 MERGE into a parquet dimension — the versioned twin of
@@ -206,7 +296,7 @@ object Sinks {
     val (tfs, tpath) = fsFor(spark, path)
     if (!tfs.exists(tpath)) { commitSwap(fresh, path); return }
 
-    val target = spark.read.parquet(path)
+    val target = readParquet(spark, path)
     val current = target.filter(col("is_current"))
     val history = target.filter(!col("is_current"))
     val batchKeyed = batch.select(
@@ -231,7 +321,7 @@ object Sinks {
     commitSwap(
       history.unionByName(untouchedCurrent).unionByName(closed)
         .unionByName(newVersions),
-      path)
+      path): Unit
   }
 
   /** Small-file compaction — the lake-maintenance pass every streaming /
@@ -250,13 +340,13 @@ object Sinks {
     val (fs, hPath) = fsFor(spark, path)
     val bytes = fs.getContentSummary(hPath).getLength
     val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     val merged =
       // <= : the equal-partitions case is a shuffle-free rewrite too —
       // repartition would hash every row for the same file count
       if (parts <= df.rdd.getNumPartitions) df.coalesce(parts)
       else df.repartition(parts)
-    commitSwap(merged, path)
+    commitSwap(merged, path): Unit
     parts
   }
 

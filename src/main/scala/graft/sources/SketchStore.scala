@@ -26,7 +26,7 @@ object SketchStore {
   }
 
   private def read(spark: SparkSession, path: String, kind: String): Array[Byte] = {
-    val row = spark.read.parquet(path).collect()(0)
+    val row = Sinks.readParquet(spark, path).collect()(0)
     require(row.getAs[String]("kind") == kind,
       s"sketch at $path is a ${row.getAs[String]("kind")}, expected $kind")
     row.getAs[Array[Byte]]("sketch")

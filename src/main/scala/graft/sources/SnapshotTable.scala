@@ -95,7 +95,7 @@ object SnapshotTable {
     val d = new org.apache.hadoop.fs.Path(snapDir(path, id))
     require(fs.exists(d),
       s"snapshot $id of $path does not exist (expired or never committed)")
-    spark.read.parquet(d.toString)
+    Sinks.readParquet(spark, d.toString)
   }
 
   /** Read the head snapshot, or None for an empty table. */

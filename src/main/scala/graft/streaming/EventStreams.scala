@@ -288,7 +288,7 @@ object EventStreams {
     * production entry point (tests use MemoryStream instead).
     */
   def fromParquetDir(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.sources.Sinks.readParquet(spark, path).schema
     spark.readStream.schema(schema).parquet(path)
   }
 
@@ -306,7 +306,8 @@ object EventStreams {
     graft.Tables.ensureNanosReadable(spark)
     // the SF layout stores each table as one FILE — the file-stream
     // source wants a directory, so stream the dir with a glob filter
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema =
+      graft.sources.Sinks.readParquet(spark, s"$dir/events.parquet").schema
     val raw = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
@@ -330,7 +331,7 @@ object EventStreams {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sources.Sinks.upsertParquet(batch.toDF(), path, keys)
+        graft.sources.Sinks.upsertParquet(batch.toDF(), path, keys): Unit
     }
 
   /** Streaming CDC apply — the standing twin of the batch

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.pipeline.CurationPipeline
+import graft.sources.Sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -268,7 +269,7 @@ object StreamingCuration {
     */
   private[graft] def candidateDocs(spark: SparkSession,
       corpusPath: String, candIds: DataFrame): DataFrame =
-    spark.read.parquet(corpusPath)
+    Sinks.readParquet(spark, corpusPath)
       .join(candIds, Seq("doc_id"), "left_semi")
 
   /** Curate ONE batch of documents against the standing corpus + index
@@ -330,7 +331,7 @@ object StreamingCuration {
       if (!hasHashes) quality
       else
         quality.withColumn("content_hash", md5(col("text")))
-          .join(spark.read.parquet(hashesPath(corpusPath)),
+          .join(Sinks.readParquet(spark, hashesPath(corpusPath)),
             Seq("content_hash"), "left_anti")
           .drop("content_hash")
 
@@ -363,7 +364,7 @@ object StreamingCuration {
       if (!hasIndex) batchClean
       else {
         val batchKeys = cleanBands.select(col("band_key")).distinct()
-        val candIdFrame = spark.read.parquet(indexPath)
+        val candIdFrame = Sinks.readParquet(spark, indexPath)
           .join(broadcast(batchKeys), Seq("band_key"))
           .select(col("doc_id")).distinct()
         val cap = candidateIdCap(spark)
@@ -375,7 +376,7 @@ object StreamingCuration {
         else {
           val candDocs =
             if (capped.length <= cap)
-              spark.read.parquet(corpusPath)
+              Sinks.readParquet(spark, corpusPath)
                 .filter(col("doc_id").isin(capped.toSeq: _*))
             else candidateDocs(spark, corpusPath, candIdFrame)
           val nearDups = CurationPipeline

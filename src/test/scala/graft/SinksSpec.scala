@@ -40,19 +40,28 @@ class SinksSpec extends SparkSpec {
     import spark.implicits._
     val v1 = Seq((1, "a", 10), (2, "b", 20), (3, "c", 30))
       .toDF("k", "name", "score")
-    Sinks.upsertParquet(v1, path, Seq("k"))
+    // every upsert returns the committed row count, observed on its
+    // write: it must match a read-back count of the table
+    def committed(n: Long): Unit =
+      assert(n == spark.read.parquet(path).count(), "observed upsert count")
+    val fresh = Sinks.upsertParquet(v1, path, Seq("k"))
+    committed(fresh)
     assert(Sinks.readParquet(spark, path).count() == 3)
 
     // Batch 2: updates k=2, inserts k=4, ships a duplicate key (two k=4
     // rows) that must collapse to one.
     val v2 = Seq((2, "b", 99), (4, "d", 40), (4, "d", 40)).toDF("k", "name", "score")
-    Sinks.upsertParquet(v2, path, Seq("k"))
+    val updated = Sinks.upsertParquet(v2, path, Seq("k"))
+    committed(updated)
+    assert(updated == 4, "the duplicate k=4 rows must collapse in the count")
     val after = Sinks.readParquet(spark, path).orderBy("k")
       .as[(Int, String, Int)].collect().toSeq
     assert(after == Seq((1, "a", 10), (2, "b", 99), (3, "c", 30), (4, "d", 40)))
 
     // Re-running the SAME batch changes nothing (MERGE, not append).
-    Sinks.upsertParquet(v2, path, Seq("k"))
+    val rerun = Sinks.upsertParquet(v2, path, Seq("k"))
+    committed(rerun)
+    assert(rerun == updated)
     val again = Sinks.readParquet(spark, path).orderBy("k")
       .as[(Int, String, Int)].collect().toSeq
     assert(again == after, "stage re-run must be a no-op")

@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.Sinks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,6 +15,11 @@ import org.apache.spark.sql.types._
   * asserting the normalized frames are identical. If someone removes the
   * normalization, the timestamp variants fail here before any operator
   * sees the drift.
+  *
+  * It also pins the parquet table reader every loader goes through
+  * ([[Sinks.readParquet]]): its driver-side footer schema must equal
+  * what `spark.read.parquet` infers, its fallbacks must behave exactly
+  * like `spark.read.parquet`, and a table load must start no Spark job.
   */
 class TablesSpec extends SparkSpec {
 
@@ -92,5 +99,113 @@ class TablesSpec extends SparkSpec {
   test("the shipped testdata events table satisfies the bigint contract") {
     val schema = Tables.events(spark, sfDir).schema
     assert(schema("ts").dataType == LongType)
+  }
+
+  /** The reader must take its footer fast path on `path` and agree with
+    * `spark.read.parquet` there.
+    */
+  private def assertFooterParity(path: String): Unit = {
+    val footer = Sinks.footerSchema(spark, path)
+    assert(footer.isDefined, s"$path: expected the footer fast path")
+    assert(Sinks.readParquet(spark, path).schema ==
+      spark.read.parquet(path).schema, s"$path: reader schema differs")
+  }
+
+  test("readParquet's footer schema equals spark.read.parquet's on every " +
+      "testdata table") {
+    val tables = new java.io.File(sfDir).list().filter(_.endsWith(".parquet"))
+    assert(tables.length == 10)
+    tables.sorted.foreach(t => assertFooterParity(s"$sfDir/$t"))
+  }
+
+  test("readParquet's footer schema equals spark.read.parquet's on the " +
+      "events.ts physical types, an upserted table and an appended table") {
+    import spark.implicits._
+    Seq(LongType, TimestampType, TimestampNTZType).foreach { t =>
+      val d = tmp("parity_ev")
+      writeEvents(d, t)
+      assertFooterParity(s"$d/events.parquet")
+    }
+    val upserted = s"${tmp("parity_up")}/t"
+    Sinks.upsertParquet(Seq((1, "a", 1.5)).toDF("k", "v", "x"), upserted, Seq("k"))
+    Sinks.upsertParquet(Seq((2, "b", 2.5)).toDF("k", "v", "x"), upserted, Seq("k"))
+    assertFooterParity(upserted)
+    val appended = s"${tmp("parity_app")}/t"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(appended)
+    Seq((2L, "b"), (3L, "c")).toDF("id", "s").repartition(2)
+      .write.mode("append").parquet(appended)
+    assert(new java.io.File(appended).list().count(_.endsWith(".parquet")) >= 3)
+    assertFooterParity(appended)
+  }
+
+  test("readParquet falls back to spark.read.parquet: same schema or the " +
+      "same exception class") {
+    import spark.implicits._
+    def same(path: String): Unit = {
+      assert(Sinks.footerSchema(spark, path).isEmpty, s"$path: expected fallback")
+      val expected = scala.util.Try(spark.read.parquet(path).schema)
+      val got = scala.util.Try(Sinks.readParquet(spark, path).schema)
+      (expected, got) match {
+        case (scala.util.Success(e), scala.util.Success(g)) => assert(g == e, path)
+        case (scala.util.Failure(e), scala.util.Failure(g)) =>
+          assert(g.getClass == e.getClass, s"$path: ${g.getClass} vs ${e.getClass}")
+        case other => fail(s"$path: $other")
+      }
+    }
+    // two files whose schemas differ: only merging sees both
+    val drift = s"${tmp("fb_merge")}/t"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(drift)
+    Seq((2L, 2.5)).toDF("id", "x").write.mode("append").parquet(drift)
+    val mergeKey = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(mergeKey, "true")
+    try same(drift) finally spark.conf.unset(mergeKey)
+    // a summary file that carries another schema wins Spark's inference
+    val summarized = s"${tmp("fb_summary")}/t"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(summarized)
+    val other = s"${tmp("fb_other")}/t"
+    Seq((1, 2.5)).toDF("k", "x").coalesce(1).write.parquet(other)
+    val otherFile = new java.io.File(other).listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(otherFile.toPath,
+      java.nio.file.Paths.get(summarized, "_common_metadata"))
+    same(summarized)
+    // partition subdirectories add the partition column
+    val partitioned = s"${tmp("fb_part")}/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "p").write.partitionBy("p").parquet(partitioned)
+    same(partitioned)
+    // no data file at all, a zero-length data file, a missing path, a glob
+    val empty = tmp("fb_empty")
+    new java.io.File(empty, "_SUCCESS").createNewFile()
+    same(empty)
+    val zero = tmp("fb_zero")
+    new java.io.File(zero, "part-00000.parquet").createNewFile()
+    same(zero)
+    same(s"${tmp("fb_missing")}/nothing_here")
+    same(s"$sfDir/nat*.parquet")
+  }
+
+  test("a Tables load starts no Spark job") {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      Tables.lineitem(spark, sfDir).schema
+      Tables.events(spark, sfDir).schema
+      Tables.documents(spark, sfDir).schema
+      // listener delivery is asynchronous but ordered: once the sentinel
+      // job is seen, every job the loads started has been seen too
+      sc.setJobDescription("tables_spec_sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("tables_spec_sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains("tables_spec_sentinel"), "sentinel job never observed")
+      assert(jobs.size == 1, s"table loads started ${jobs.size - 1} job(s)")
+    } finally sc.removeSparkListener(listener)
   }
 }

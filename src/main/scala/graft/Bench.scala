@@ -36,55 +36,11 @@ import org.apache.spark.sql.SparkSession
   * protocol.
   */
 object Bench {
-  /** `SPARK_GRAFT_CONF="k=v;k2=v2"` entries as (key, value) pairs. Keys
-    * and values are trimmed and empty entries skipped; an entry without
-    * `=`, or with an empty key, fails loudly instead of being dropped.
-    */
-  def parseConf(raw: String): Seq[(String, String)] =
-    raw.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
-      val i = kv.indexOf('=')
-      require(i >= 0, s"SPARK_GRAFT_CONF entry has no '=': '$kv'")
-      val k = kv.substring(0, i).trim
-      require(k.nonEmpty, s"SPARK_GRAFT_CONF entry has an empty key: '$kv'")
-      k -> kv.substring(i + 1).trim
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCores(32)
     def newSession(): SparkSession = {
-      var b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        // Shuffle/partition adaptivity (r17, guide §2.2; measured on the
-        // 15 heaviest queries: geomean 0.70× vs the r16 defaults, every
-        // iterative operator 25-50% faster, no regression):
-        //   - bypassMergeThreshold=1 disables the bypass-merge shuffle
-        //     writer, whose M×R tiny file creates dominated per-round
-        //     cost at local core counts (taskRunSum showed ~6 s of pure
-        //     shuffle-WRITE time inside a 5 s pagerank). At scale R
-        //     exceeds the 200 default and the sort writer runs anyway —
-        //     this makes local execution match the at-scale path.
-        //   - canChangeCachedPlanOutputPartitioning lets AQE coalesce
-        //     persisted frames by BYTES instead of pinning them at full
-        //     shuffle width (betweenness_sampled: 711 → 228 tasks) —
-        //     partition counts now adapt to data volume in both
-        //     directions, which is the r16 verdict's top item.
-        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-          "true")
-      // Scale-dependent knobs stay parameterised (guide §2.2/§9): extra
-      // session confs come from SPARK_GRAFT_CONF="k=v;k2=v2" so a cluster
-      // deployment (or a config experiment) can override without touching
-      // the measured local defaults above.
-      sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(parseConf)
-        .foreach { case (k, v) => b = b.config(k, v) }
-      val s = b.withExtensions(new GraftExtensions).getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = GraftSession.start(cpus)
       // Warm the JVM/codegen/file-source paths once so the first
       // measured query doesn't absorb session startup cost.
       Tables.lineitem(s, sfDir).limit(10).count()
@@ -120,7 +76,7 @@ object Bench {
     // fresh context. Restart cost lands between queries, never inside
     // one.
     val restartEvery = sys.env.get("SPARK_GRAFT_RESTART_EVERY")
-      .map(_.toInt).filter(_ > 0)
+      .map(GraftSession.envInt("SPARK_GRAFT_RESTART_EVERY", _)).filter(_ > 0)
     var sinceRestart = 0
     def maybeRestart(): Unit = restartEvery.foreach { n =>
       if (sinceRestart >= n) {
@@ -180,56 +136,36 @@ object Bench {
     val hofFoldFamily = Set("bpe_encode", "bpe_merges",
       "bpe_compression_curve", "unigram_train", "unigram_encode",
       "wordpiece_encode", "tokenizer_compare")
-    def sweep(subset: Option[Set[String]] = None)
-        : Seq[(String, Double, Option[String])] = selected
-      .filter { case (name, _) => subset.forall(_.contains(name)) }
-      .map {
-      case (name, fn) =>
-        maybeRestart()
-        if (hofFoldFamily(name)) {
-          try { fn(spark, sfDir).count(); () } catch { case _: Throwable => }
-          spark.catalog.clearCache()
-        }
-        val t0 = System.nanoTime()
-        val err = try { fn(spark, sfDir).count(); None } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            Some(name)
-        }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        // Release per-operator persisted frames between queries (cache
-        // accumulation would skew later queries' memory headroom).
-        spark.catalog.clearCache()
-        sinceRestart += 1
-        maybeCalibrate()
-        (name, if (err.isEmpty) elapsed else -1.0, err)
-    }
-
-    // Extra timed entries beyond SparkEntry.queries: streaming jobs
-    // (batch parity is spec-proven in StreamingSpec; timed so a
-    // regression in the streaming path shows up in BENCH_r0N) and the
-    // end-to-end curation pipeline (the headline "curate the whole
-    // corpus" number: quality → dedup → decontaminate → mix → pack
-    // with real staged parquet handoffs). Each entry is a thunk run to
-    // completion; uniq disambiguates per-invocation names (memory
-    // sinks are session-global tables).
-    var extraRun = 0
-    def extraBench(name: String, run: String => Unit)
+    // One measured entry: restart if due, an optional discarded warm-up
+    // run, then the timed run. A failure is recorded, not rethrown.
+    def measure(name: String, warm: Boolean = false)(run: => Unit)
         : (String, Double, Option[String]) = {
-      extraRun += 1
       maybeRestart()
+      if (warm) {
+        try run catch { case _: Throwable => }
+        spark.catalog.clearCache()
+      }
       val t0 = System.nanoTime()
-      val err = try { run(s"${name}_$extraRun"); None }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        Some(name)
+      val err = try { run; None } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          Some(name)
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
+      // Release per-operator persisted frames between queries (cache
+      // accumulation would skew later queries' memory headroom).
       spark.catalog.clearCache()
       sinceRestart += 1
       maybeCalibrate()
       (name, if (err.isEmpty) elapsed else -1.0, err)
     }
+    def sweep(subset: Option[Set[String]] = None)
+        : Seq[(String, Double, Option[String])] = selected
+      .filter { case (name, _) => subset.forall(_.contains(name)) }
+      .map { case (name, fn) =>
+        measure(name, hofFoldFamily(name))(fn(spark, sfDir).count())
+      }
+
     // After draining, the memory-sink temp view is dropped: clearCache()
     // does not release memory-sink tables, so without the drop every
     // complete-mode result would stay pinned in the driver for the rest
@@ -245,98 +181,63 @@ object Bench {
         .foreach(java.nio.file.Files.deleteIfExists(_))
       finally walk.close()
     }
-    val extraEntries: Seq[(String, String => Unit)] = Seq(
-      ("stream_bench_window_agg", (uniq: String) => drain(
-        streaming.EventStreams.windowedAgg(
-            streaming.EventStreams.eventsStream(spark, sfDir))
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("complete").start(), uniq)),
-      ("stream_bench_histogram", (uniq: String) => drain(
-        streaming.EventStreams.histogramSketch(
-            streaming.EventStreams.eventsStream(spark, sfDir))
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("complete").start(), uniq)),
-      ("stream_bench_novelty", { (uniq: String) =>
-        val sp = spark
-        import sp.implicits._
-        drain(streaming.EventStreams.noveltyStream(
-            streaming.EventStreams.eventsStream(spark, sfDir)
-              .as[streaming.EventStreams.Event])
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("complete").start(), uniq)
-      }),
-      ("stream_bench_heavyhitters", { (uniq: String) =>
-        val sp = spark
-        import sp.implicits._
-        drain(streaming.EventStreams.heavyHittersStream(
-            streaming.EventStreams.eventsStream(spark, sfDir)
-              .as[streaming.EventStreams.Event])
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("update").start(), uniq)
-      }),
-      ("stream_bench_dauwords", (uniq: String) => drain(
-        streaming.EventStreams.dauWordsStream(
-            streaming.EventStreams.eventsStream(spark, sfDir))
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("complete").start(), uniq)),
-      ("stream_bench_bounce", { (uniq: String) =>
-        val sp = spark
-        import sp.implicits._
-        drain(streaming.EventStreams.bounceRateStream(
-            streaming.EventStreams.eventsStream(spark, sfDir)
-              .as[streaming.EventStreams.Event])
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("complete").start(), uniq)
-      }),
-      ("stream_bench_dedup", (uniq: String) => drain(
-        streaming.EventStreams.dedupedStream(
-            streaming.EventStreams.eventsStream(spark, sfDir))
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("append").start(), uniq)),
-      ("stream_bench_funnel", { (uniq: String) =>
-        val sp = spark
-        import sp.implicits._
-        drain(streaming.EventStreams.funnelStream(
-            streaming.EventStreams.eventsStream(spark, sfDir)
-              .as[streaming.EventStreams.Event])
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("update").start(), uniq)
-      }),
-      ("stream_bench_debounce", { (uniq: String) =>
-        val sp = spark
-        import sp.implicits._
-        drain(streaming.EventStreams.debounced(
-            streaming.EventStreams.eventsStream(spark, sfDir)
-              .as[streaming.EventStreams.Event])
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("append").start(), uniq)
-      }),
-      ("stream_bench_attribution_outer", (uniq: String) => drain(
-        streaming.EventStreams.attributionOuter(
-            streaming.EventStreams.eventsStream(spark, sfDir))
-          .writeStream.format("memory").queryName(uniq)
-          .outputMode("append").start(), uniq)),
+
+    // Extra timed entries beyond SparkEntry.queries: streaming jobs
+    // (batch parity is spec-proven in StreamingSpec; timed so a
+    // regression in the streaming path shows up in BENCH_r0N) and the
+    // end-to-end curation pipeline (the headline "curate the whole
+    // corpus" number: quality → dedup → decontaminate → mix → pack
+    // with real staged parquet handoffs). Each entry is a thunk run to
+    // completion; uniq disambiguates per-invocation names (memory
+    // sinks are session-global tables).
+    import streaming.EventStreams
+    def events = EventStreams.eventsStream(spark, sfDir)
+    def typedEvents = {
+      val sp = spark
+      import sp.implicits._
+      events.as[EventStreams.Event]
+    }
+    // (name, stream, output mode): each runs into a memory sink, drained.
+    val memorySinkStreams
+        : Seq[(String, () => org.apache.spark.sql.Dataset[_], String)] = Seq(
+      ("stream_bench_window_agg", () => EventStreams.windowedAgg(events),
+        "complete"),
+      ("stream_bench_histogram", () => EventStreams.histogramSketch(events),
+        "complete"),
+      ("stream_bench_novelty", () => EventStreams.noveltyStream(typedEvents),
+        "complete"),
+      ("stream_bench_heavyhitters",
+        () => EventStreams.heavyHittersStream(typedEvents), "update"),
+      ("stream_bench_dauwords", () => EventStreams.dauWordsStream(events),
+        "complete"),
+      ("stream_bench_bounce",
+        () => EventStreams.bounceRateStream(typedEvents), "complete"),
+      ("stream_bench_dedup", () => EventStreams.dedupedStream(events),
+        "append"),
+      ("stream_bench_funnel", () => EventStreams.funnelStream(typedEvents),
+        "update"),
+      ("stream_bench_debounce", () => EventStreams.debounced(typedEvents),
+        "append"),
+      ("stream_bench_attribution_outer",
+        () => EventStreams.attributionOuter(events), "append"))
+    val extraEntries: Seq[(String, String => Unit)] = memorySinkStreams.map {
+      case (name, stream, mode) => name -> ((uniq: String) => drain(
+        stream().writeStream.format("memory").queryName(uniq)
+          .outputMode(mode).start(), uniq))
+    } ++ Seq(
       ("stream_bench_cdc", { (_: String) =>
-        val sp = spark
-        import sp.implicits._
         val out = java.nio.file.Files.createTempDirectory("graft_bench_cdc")
-        val q = streaming.EventStreams.cdcToTable(
-          streaming.EventStreams.eventsStream(spark, sfDir)
-            .as[streaming.EventStreams.Event],
+        val q = EventStreams.cdcToTable(typedEvents,
           out.resolve("state").toString)
         try q.processAllAvailable()
         finally { q.stop(); rmTree(out) }
       }),
       ("stream_bench_drift", { (_: String) =>
-        val sp = spark
-        import sp.implicits._
         val out = java.nio.file.Files.createTempDirectory("graft_bench_drift")
         val ref = Map("click" -> 200000L, "signup" -> 200000L,
           "error" -> 200000L, "view" -> 200000L, "purchase" -> 200000L)
-        val q = streaming.EventStreams.driftToTable(
-          streaming.EventStreams.eventsStream(spark, sfDir)
-            .as[streaming.EventStreams.Event],
-          ref, out.resolve("days").toString)
+        val q = EventStreams.driftToTable(typedEvents, ref,
+          out.resolve("days").toString)
         try q.processAllAvailable()
         finally { q.stop(); rmTree(out) }
       }),
@@ -376,8 +277,12 @@ object Bench {
           ()
         } finally rmTree(out)
       })).filter { case (name, _) => only.forall(_.contains(name)) }
+    var extraRun = 0
     def extraSweep(): Seq[(String, Double, Option[String])] =
-      extraEntries.map { case (n, r) => extraBench(n, r) }
+      extraEntries.map { case (n, r) =>
+        extraRun += 1
+        measure(n)(r(s"${n}_$extraRun"))
+      }
 
     val cal0 = calibrate()
     cals += cal0

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostics main: print the formatted physical plan for named
   * registered queries (all of them with no args) — the `.explain` audit
   * loop. Usage: runMain graft.PlanDump [sfDir] [query ...]
@@ -10,19 +8,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Bench.newSession's r17 shuffle-adaptivity pair — dumped plans
-      // must be the plans the bench/verify sessions run.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.start(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostics main ([[PlanDump]]'s sibling): execute named registered
   * queries and print the number of shuffle exchanges in the FINAL
   * adaptive plan — the number ShuffleBudgetSpec pins. Usage:
@@ -13,31 +11,13 @@ object ShuffleCount {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.start(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case Some(fn) =>
           try {
-            val df = fn(spark, sfDir)
-            df.collect()
-            // AdaptiveSparkPlan prints "== Final Plan ==" then
-            // "== Initial Plan ==" — count only the final section or
-            // every exchange is double-counted (the spec's rule).
-            val p = df.queryExecution.executedPlan.toString
-              .split("== Initial Plan ==")(0)
-            val n = p.linesIterator.count(l =>
-              l.contains("Exchange hashpartitioning")
-                || l.contains("Exchange rangepartitioning")
-                || l.contains("Exchange SinglePartition")
-                || l.contains("Exchange RoundRobinPartitioning"))
+            val n = functions.PlanGuard.shuffles(fn(spark, sfDir))
             println(s"SHUFFLES $name=$n")
           } catch {
             case e: Throwable => println(s"SHUFFLES $name=ERROR ${e.getMessage}")

@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Bench.newSession's r17 shuffle-adaptivity pair, mirrored here so
-      // the verified plans are the measured plans (see Bench.scala).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // context-level (must precede getOrCreate): lets the cleaner
-      // delete reliable checkpoint data once its RDD is GC'd — see the
-      // SPARK_GRAFT_CHECKPOINT_DIR note below; harmless without a dir
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.envCores(4))
     // Big-SF sweeps: localCheckpoint keeps state in block-manager
     // memory, and once storage memory fills, evicted blocks are LOST
     // (the r16 sf10 sweep cascaded 342 failures that way). A reliable
@@ -33,7 +14,7 @@ object Verify {
     // cleaner conf matters as much as the dir: without it Spark NEVER
     // deletes reliable checkpoint data during an application, so a
     // multi-hundred-query sweep would trade the memory exhaustion for
-    // disk exhaustion; with it (set in the builder above — it is
+    // disk exhaustion; with it (set in GraftSession.conf — it is
     // context-level), each query's checkpoints are reclaimed once
     // their RDD references are GC'd between queries.
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")

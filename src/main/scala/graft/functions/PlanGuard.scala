@@ -24,8 +24,32 @@ import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
   * Reference analog: the course pipelines materialize pandas frames
   * freely (utils/utils.py); at Spark scale a materialization boundary
   * is exactly where a single-reducer sort can hide from plan audits.
+  *
+  * It also holds the plan statistics that specs and diagnostics share:
+  * [[finalPlan]] and the exchange-counting rule [[shuffles]].
   */
 object PlanGuard {
+
+  /** The FINAL section of `df`'s executed plan: AdaptiveSparkPlan prints
+    * "== Final Plan ==" followed by "== Initial Plan ==" — reading only
+    * the final section keeps every exchange from being double-counted.
+    * Call it after `df` has executed, or AQE has no final plan yet.
+    */
+  def finalPlan(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+
+  /** Executes `df` and returns the number of shuffle exchanges in its
+    * [[finalPlan]] — the number ShuffleBudgetSpec pins and
+    * graft.ShuffleCount prints. It counts EVERY shuffle exchange (hash,
+    * range, single-partition, AND round-robin repartitions) — only
+    * broadcast and reused exchanges are not data shuffles.
+    */
+  def shuffles(df: DataFrame): Int = {
+    df.collect()
+    finalPlan(df).linesIterator.count(l =>
+      l.contains("Exchange")
+        && !l.contains("BroadcastExchange") && !l.contains("ReusedExchange"))
+  }
 
   /** The unpartitioned Window nodes in `df`'s optimized plan, rendered
     * as their window-expression name lists (for the failure message).

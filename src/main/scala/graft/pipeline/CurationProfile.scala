@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: run the curation pipeline once against
   * SPARK_GRAFT_SF_DIR and print the manifest — stage row counts,
   * reconciliation checks, and the per-stage wall-time split — as one
@@ -11,16 +9,7 @@ import org.apache.spark.sql.SparkSession
 object CurationProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(graft.GraftSession.envCores(32))
     val out = java.nio.file.Files.createTempDirectory("graft_curation_profile")
     val m = CurationPipeline.runAll(spark, sfDir, out.toString)
     println(m.map { case (k, v) => s""""$k":$v""" }

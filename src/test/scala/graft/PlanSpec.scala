@@ -167,8 +167,7 @@ class PlanSpec extends SparkSpec {
   test("mix_rebalance: rate joins broadcast, the corpus never shuffles") {
     val df = operators.Sampling.mixRebalance(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     // The per-source counts and the total are tiny — both must reach the
     // corpus scan as broadcasts; a shuffle join here would move the whole
     // corpus to apply a 20-row rate table.
@@ -182,8 +181,7 @@ class PlanSpec extends SparkSpec {
   test("semdedup: pair join reads the materialized assignment, never re-runs Lloyd rounds") {
     val df = operators.Clustering.semdedup(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     // The Lloyd assignment is eagerly checkpointed ONCE (the centroid
     // broadcast property itself is pinned by the cluster_kmeans test on
     // assign()); the dedup plan must read that materialized RDD on both
@@ -197,8 +195,7 @@ class PlanSpec extends SparkSpec {
   test("sequence_pack: corpus cumsum window is chunked (never one task per source); bases broadcast") {
     val df = operators.Sampling.sequencePack(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     // The window that runs over CORPUS rows (producing local_off) must
     // partition by (source, chunk) — a spec of source alone would
     // serialize each source's whole token stream through one task.
@@ -217,8 +214,7 @@ class PlanSpec extends SparkSpec {
       "range/nested-loop join") {
     val df = operators.Relational.scd2PointInTime(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     // the validity window must ride as a residual condition on the
     // custkey equi-join; a nested-loop plan here would be O(facts·dim)
     // at 100 TB
@@ -232,8 +228,7 @@ class PlanSpec extends SparkSpec {
       "sort, no join") {
     val df = sources.Ingest.cdcApply(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     assert(!p.contains("Window") && !p.contains("Join"),
       s"the changelog collapse must stay a pure aggregate:\n$p")
     assert(p.contains("partial_max") || p.contains("HashAggregate"),
@@ -253,8 +248,7 @@ class PlanSpec extends SparkSpec {
   test("importance_weights: hashed stats join broadcasts; no term-keyed shuffle anywhere") {
     val df = operators.Sampling.importanceWeights(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     // The constant-B stats table must reach the tf rows as a broadcast;
     // and no exchange may partition by the raw term — Zipf skew makes a
     // term-keyed corpus shuffle a guaranteed mega-partition at scale.
@@ -267,8 +261,7 @@ class PlanSpec extends SparkSpec {
   test("lm_score: LM stats broadcast; no bigram-keyed shuffle anywhere") {
     val df = operators.TextAnalysis.lmScore(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     // The constant-B stats table must reach the tf rows as a broadcast,
     // and no exchange may partition by the raw bigram — Zipf skew makes
     // a bigram-keyed corpus shuffle a mega-partition at scale.
@@ -281,8 +274,7 @@ class PlanSpec extends SparkSpec {
   test("dedup_substring: start lists broadcast back onto the documents scan") {
     val df = operators.Dedup.dedupSubstring(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     // The per-doc dup-start lists ride dimHint: while duplication is
     // sparse they broadcast and the document text never shuffles.
     assert(p.contains("BroadcastHashJoin"), s"start lists not broadcast:\n$p")
@@ -305,8 +297,7 @@ class PlanSpec extends SparkSpec {
     try {
       val df = operators.Analytics.topicPopularity(spark, sfDir)
       df.collect()
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
+      val p = functions.PlanGuard.finalPlan(df)
       assert(!p.contains("BroadcastHashJoin"),
         s"dim still force-broadcast past the threshold:\n$p")
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
@@ -337,15 +328,11 @@ class PlanSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val df = sources.Ingest.bucketedJoin(spark, sfDir)
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      assert(p.contains("SortMergeJoin"), s"expected merge join over buckets:\n$p")
       // Exactly ONE data exchange is allowed: the final tiny groupBy on
       // o_orderpriority. The join itself must read co-located buckets.
-      val exchanges = p.linesIterator.count(l =>
-        l.contains("Exchange") && !l.contains("BroadcastExchange")
-          && !l.contains("ReusedExchange"))
+      val exchanges = functions.PlanGuard.shuffles(df)
+      val p = functions.PlanGuard.finalPlan(df)
+      assert(p.contains("SortMergeJoin"), s"expected merge join over buckets:\n$p")
       assert(exchanges <= 1, s"bucketed join still shuffles ($exchanges exchanges):\n$p")
       // Bucket-sorted layout also kills the pre-merge sort step.
       assert(p.contains("Bucketed: true"), s"scan not bucket-aware:\n$p")
@@ -369,8 +356,7 @@ class PlanSpec extends SparkSpec {
   test("attribution_linear: no event self-join — window frames only") {
     val df = operators.EventScience.attributionLinear(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     val eventScans = p.linesIterator.count(l =>
       l.contains("FileScan parquet") && l.contains("events"))
     assert(eventScans == 1, s"events scanned $eventScans times (self-join?):\n$p")
@@ -389,8 +375,7 @@ class PlanSpec extends SparkSpec {
   test("theilsen_trend: the pair expansion runs on the monthly grid, not orders") {
     val df = operators.Retrieval.theilsenTrend(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val p = functions.PlanGuard.finalPlan(df)
     // orders is scanned at most twice (once per monthly-aggregate side);
     // the C(n,2) join must join AGGREGATED frames — assert no join
     // directly on an un-aggregated orders scan by checking the join keys
@@ -401,7 +386,7 @@ class PlanSpec extends SparkSpec {
     assert(scans <= 2, s"orders scanned $scans times:\n$p")
   }
 
-  /** Single-reducer guard, REGISTRY-WIDE: a Window with an EMPTY
+  /* Single-reducer guard, REGISTRY-WIDE: a Window with an EMPTY
     * partition spec funnels its whole input through one task
     * (`WindowExec: No Partition Defined`) — correct at sf0.1, fatal at
     * 100 TB. Every corpus- or range-proportional cumulative in the repo
@@ -418,12 +403,6 @@ class PlanSpec extends SparkSpec {
     * .scala; guard behavior pinned below). Between the two scans no
     * materialization can hide a single-reducer sort.
     */
-  private def unpartitionedWindows(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-    }.size
-
   test("registry-wide: no unpartitioned Window outside the documented allowlist") {
     // operator -> why its unpartitioned window cannot grow with the data
     // (counts are not pinned: plan-subtree duplication under self-joins
@@ -457,7 +436,7 @@ class PlanSpec extends SparkSpec {
       "unigram_train" -> "rank over the ≤20-row post-LIMIT piece-table head")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
       .flatMap { case (name, fn) =>
-        val n = unpartitionedWindows(fn(spark, sfDir))
+        val n = functions.PlanGuard.unpartitionedWindows(fn(spark, sfDir)).size
         if (n > 0 && !allow.contains(name)) Some(s"$name ($n)") else None
       }
     assert(offenders.isEmpty,

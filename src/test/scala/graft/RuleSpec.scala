@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The injected optimizer rule must fire (plan shows CommonCount) and be
@@ -9,38 +8,22 @@ import org.apache.spark.sql.functions._
   */
 class RuleSpec extends SparkSpec {
 
-  private def withExtSession[A](f: SparkSession => A): A = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      f(s2)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
-
   test("RewriteIntersectCount rewrites size(array_intersect) and preserves values") {
     // Literal inputs constant-fold to a LocalRelation before optimizer
     // rules run, so exercise the rule over a real file-backed plan.
-    def query(s: SparkSession) =
-      Tables.documents(s, sfDir)
+    def query() =
+      Tables.documents(spark, sfDir)
         .select(col("doc_id"),
           size(array_intersect(
             split(col("text"), " "),
             split(lit("the fast key order sort"), " "))).as("n"))
-    val plain = {
-      val df = query(spark)
+    val plain = withoutIntersectRewrite {
+      val df = query()
       assert(!df.queryExecution.optimizedPlan.toString.contains("commoncount"))
       df.collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
     }
-    val rewritten = withExtSession { s2 =>
-      val df = query(s2)
+    val rewritten = {
+      val df = query()
       assert(df.queryExecution.optimizedPlan.toString.contains("commoncount"),
         s"rule did not fire:\n${df.queryExecution.optimizedPlan}")
       df.collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq

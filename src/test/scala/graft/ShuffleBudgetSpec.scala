@@ -5,31 +5,15 @@ package graft
   * a regression that adds an exchange to a hot query should fail CI,
   * not surface as a mystery slowdown at scale.
   *
-  * Counts are UPPER BOUNDS on `Exchange hashpartitioning` /
-  * `Exchange rangepartitioning` / `Exchange SinglePartition` occurrences
-  * after execution (AQE may reuse or elide, never add).
+  * Counts are UPPER BOUNDS on [[functions.PlanGuard.shuffles]] after
+  * execution (AQE may reuse or elide, never add).
   */
 class ShuffleBudgetSpec extends SparkSpec {
-
-  private def shuffles(df: org.apache.spark.sql.DataFrame): Int = {
-    df.collect()
-    // AdaptiveSparkPlan prints "== Final Plan ==" followed by
-    // "== Initial Plan ==" — count only the final section or every
-    // exchange is double-counted.
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    // count EVERY shuffle exchange (hash, range, single-partition, AND
-    // round-robin repartitions) — only broadcast and reused exchanges
-    // are not data shuffles.
-    p.linesIterator.count(l =>
-      l.contains("Exchange")
-        && !l.contains("BroadcastExchange") && !l.contains("ReusedExchange"))
-  }
 
   private def check(name: String, budget: Int)(
       mk: => org.apache.spark.sql.DataFrame): Unit =
     test(s"$name stays within its shuffle budget of $budget") {
-      val n = shuffles(mk)
+      val n = functions.PlanGuard.shuffles(mk)
       assert(n <= budget, s"$name now has $n shuffles (budget $budget)")
     }
 

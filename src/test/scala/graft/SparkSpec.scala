@@ -4,29 +4,23 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession fixture for all specs. */
+/** Shared local SparkSession fixture for all specs: the same
+  * [[GraftSession]] the mains run, at 4 cores.
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `f` with graft's `size(array_intersect)` rewrite excluded from
+    * the optimizer: the built-in form the rewrite is checked against.
+    */
+  def withoutIntersectRewrite[A](f: => A): A = {
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      "graft.RewriteIntersectCount")
+    try f finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Bench.newSession's r17 shuffle-adaptivity pair (see Bench.scala):
-      // tests exercise the same writer/coalescing paths the bench runs,
-      // and the sort-writer path cuts the suite's own shuffle-file churn.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.start(4)
 }

@@ -11,6 +11,9 @@ materialization) and names the next scale bug before production does.
 
 Usage: python3 tools/scale_ratio.py BENCH_FULL_LATEST.json \
          BENCH_SF1_r15.json [data_ratio=10]
+
+A map is a Bench JSON object, one wrapped as {"parsed": {...}}
+(BENCH_r17.json's shape), or a bare {query: seconds} object.
 """
 import json
 import sys
@@ -18,6 +21,8 @@ import sys
 
 def qmap(path):
     d = json.load(open(path))
+    if isinstance(d.get("parsed"), dict):
+        d = d["parsed"]
     return d["queries"] if "queries" in d else d
 
 
@@ -29,6 +34,9 @@ def main(lo_path, hi_path, data_ratio):
         if lo[q] <= 0 or hi[q] <= 0:
             continue
         rows.append((hi[q] / lo[q], q, lo[q], hi[q]))
+    if not rows:
+        sys.exit("scale_ratio: the two maps share no queries with positive "
+                 "times on both sides; nothing to compare")
     rows.sort(reverse=True)
     print(f"{len(rows)} shared queries; data ratio {data_ratio}x; "
           f"total {sum(r[2] for r in rows):.1f}s -> "

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -63,9 +63,15 @@ import org.apache.spark.sql.functions._
   */
 object Ranks {
 
-  /** The enforced ceiling on cell cardinality (see object doc). */
-  private def cellCap(df: DataFrame): Int =
-    df.sparkSession.conf.get("spark.graft.maxRankCells", "4096").toInt
+  /** The enforced ceiling on cell cardinality (see object doc): the
+    * session's `spark.graft.maxRankCells`, default 4096. A value that is
+    * not an integer, or is below 1, fails naming the key.
+    */
+  private[graft] def cellCap(spark: SparkSession): Int = {
+    val raw = spark.conf.get("spark.graft.maxRankCells", "4096")
+    raw.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"spark.graft.maxRankCells must be an integer >= 1, got '$raw'"))
+  }
 
   /** Plan-embedded cap check for HAND-BUILT cells: the per-cell row
     * count of the triangular left join is max(1, #strictly-lower
@@ -117,7 +123,7 @@ object Ranks {
       .groupBy(col("__gr_cell"))
       .agg(coalesce(sum(col("__gr_c_lo")), lit(0L)).as("__gr_base"),
         count(lit(1)).as("__gr_np")),
-      "__gr_np", "withGlobalRank", cellCap(df))
+      "__gr_np", "withGlobalRank", cellCap(df.sparkSession))
     val wCell = Window.partitionBy(col("__gr_cell")).orderBy(order: _*)
     tagged
       .withColumn("__gr_rn", row_number().over(wCell).cast("long"))
@@ -156,7 +162,7 @@ object Ranks {
         items.indices.tail.map(i =>
           baseFold(col(s"__xf_lo$i")).as(s"__xf_b$i"))
           :+ count(lit(1)).as("__xf_np"): _*),
-      "__xf_np", helper, cellCap(df))
+      "__xf_np", helper, cellCap(df.sparkSession))
     val wCell = Window.partitionBy(col("__xf_cell")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val joined = tagged.join(graft.Tables.stateHint(bases), Seq("__xf_cell"))
@@ -213,7 +219,7 @@ object Ranks {
   private def spanBucketed(df: DataFrame, value: Column, ascending: Boolean,
       buckets: Int): (DataFrame, Column, Seq[Column]) = {
     require(buckets > 0, s"Ranks: buckets must be positive, got $buckets")
-    val cap = cellCap(df)
+    val cap = cellCap(df.sparkSession)
     require(buckets <= cap,
       s"Ranks: buckets=$buckets exceeds spark.graft.maxRankCells=$cap — " +
         "the triangular metadata join is O(cells^2); keep the bucket " +

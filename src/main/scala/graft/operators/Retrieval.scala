@@ -300,7 +300,7 @@ object Retrieval {
     // path's 1024 global value cells, dispatch to the bucketed
     // histogram-CDF form instead of dying at Ranks' capPairs assert.
     // The fallback keeps the exact schema (norm_bucket dropped).
-    val cap = spark.conf.get("spark.graft.maxRankCells", "4096").toInt
+    val cap = graft.functions.Ranks.cellCap(spark)
     if (cap < QuantileNormalizeCells) {
       // Loud, because the registered quantile_normalize oracle is the
       // EXACT SQL: a correctness gate run under a lowered cap would fail

@@ -617,7 +617,7 @@ object StatTests {
     * 256-bucket core) and the default path's exactness.
     */
   def spearmanCorr(spark: SparkSession, dir: String): DataFrame = {
-    val cap = spark.conf.get("spark.graft.maxRankCells", "4096").toInt
+    val cap = graft.functions.Ranks.cellCap(spark)
     if (cap < SpearmanValueCells)
       return spearmanBucketedCore(spark, dir, cap)
         .select(col("n"), lit(null).cast("bigint").as("sum_d2"),

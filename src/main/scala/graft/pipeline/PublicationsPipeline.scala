@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.Tables
-import graft.functions.Exact
+import graft.functions.{Exact, Parallel}
 import graft.operators.{Analytics, Cleaning, Dwh}
 import graft.sources.{GraphSink, Sinks}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -270,18 +270,33 @@ object PublicationsPipeline {
     * `batchFilter` scopes the run to a slice (the Airflow backfill
     * window analog); identity = full refresh. Each table's count is the
     * one its upsert observed on the committed write.
+    *
+    * The tables upsert concurrently through [[Parallel.all]], one thunk
+    * per table, like the reference's independent DWH loads
+    * (populate_DWH.py). No table reads another's output, and each
+    * upsert's staging and swap touch only its own path, so the landed
+    * tables are the ones sequential upserts would land; the overlap
+    * only fills the task slots a lone table's short stage jobs leave
+    * idle.
     */
   def upsertWarehouse(spark: SparkSession, dataDir: String, outDir: String,
       batchFilter: DataFrame => DataFrame = identity): Map[String, Long] = {
-    val tables = Seq(
-      ("wh_dim_customer", Dwh.dimCustomer(spark, dataDir), Seq("customer_key")),
-      ("wh_dim_publisher", Dwh.dimPublisher(spark, dataDir), Seq("pub_id")),
-      ("wh_fact_sales", Dwh.factSales(spark, dataDir),
-        Seq("order_key", "line_number")),
-      ("wh_collab_edges", Analytics.collabPairs(spark, dataDir),
-        Seq("supp_a", "supp_b")))
-    tables.map { case (name, df, keys) =>
-      name -> Sinks.upsertParquet(batchFilter(df), s"$outDir/$name", keys)
-    }.toMap
+    val tables = warehouseTables(spark, dataDir)
+    val counts = Parallel.all(spark)(tables.map { case (name, source, keys) =>
+      () => Sinks.upsertParquet(batchFilter(source()), s"$outDir/$name", keys)
+    })
+    tables.map(_._1).zip(counts).toMap
   }
+
+  /** The incremental warehouse's tables: name, source frame builder and
+    * upsert keys.
+    */
+  private[graft] def warehouseTables(spark: SparkSession, dataDir: String)
+      : Seq[(String, () => DataFrame, Seq[String])] = Seq(
+    ("wh_dim_customer", () => Dwh.dimCustomer(spark, dataDir), Seq("customer_key")),
+    ("wh_dim_publisher", () => Dwh.dimPublisher(spark, dataDir), Seq("pub_id")),
+    ("wh_fact_sales", () => Dwh.factSales(spark, dataDir),
+      Seq("order_key", "line_number")),
+    ("wh_collab_edges", () => Analytics.collabPairs(spark, dataDir),
+      Seq("supp_a", "supp_b")))
 }

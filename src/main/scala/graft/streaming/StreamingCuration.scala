@@ -436,6 +436,13 @@ object StreamingCuration {
       .select(col("doc_id").as("vec_id"), col("embedding"))
     try batchId match {
       case None =>
+        // Sequential on purpose, and hashes last: with no batch ledger,
+        // replay safety is content-level only — a replayed doc drops at
+        // stage 3 because its content hash landed, which is sound only
+        // if a landed hash implies its corpus and index rows landed too.
+        // Concurrent appends (graft.functions.Parallel) could land a
+        // hash and then fail the corpus append, and the replay would
+        // drop a doc that is in no table.
         if (n > 0) {
           out.write.mode("append").parquet(corpusPath)
           survivorBands.write.mode("append").parquet(indexPath)

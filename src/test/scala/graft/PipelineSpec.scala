@@ -211,21 +211,40 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("upsertWarehouse: re-run is a no-op, backfill slice merges without clobbering") {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.col
     val out = Files.createTempDirectory("graft_wh").toString
-    val full = PublicationsPipeline.upsertWarehouse(spark, sfDir, out)
+    // The concurrent landing must land what one-table-at-a-time upserts
+    // of the same frames land: after every run, each table equals, row
+    // for row, its sequential twin in a second directory.
+    val seqOut = Files.createTempDirectory("graft_wh_seq").toString
+    val tables = PublicationsPipeline.warehouseTables(spark, sfDir)
+    def landed(filter: DataFrame => DataFrame = identity): Map[String, Long] = {
+      val counts = PublicationsPipeline.upsertWarehouse(spark, sfDir, out, filter)
+      val seqCounts = tables.map { case (name, source, keys) =>
+        name -> sources.Sinks.upsertParquet(filter(source()), s"$seqOut/$name", keys)
+      }.toMap
+      assert(counts == seqCounts, s"concurrent $counts vs sequential $seqCounts")
+      tables.foreach { case (name, _, _) =>
+        val a = sources.Sinks.readParquet(spark, s"$out/$name")
+        val b = sources.Sinks.readParquet(spark, s"$seqOut/$name")
+        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+          s"$name: concurrent landing differs from sequential upserts")
+      }
+      counts
+    }
+    val full = landed()
     assert(full.values.forall(_ > 0), s"empty warehouse table in $full")
 
     // Re-running the identical load must not grow any table (the
     // reference's Postgres loader would double every row here).
-    val rerun = PublicationsPipeline.upsertWarehouse(spark, sfDir, out)
+    val rerun = landed()
     assert(rerun == full, s"re-run changed counts: $full -> $rerun")
 
     // A backfill batch restricted to a key slice only merges that slice;
     // every row outside the slice survives untouched.
-    val slice = PublicationsPipeline.upsertWarehouse(spark, sfDir, out,
-      df => if (df.columns.contains("customer_key"))
-        df.filter(col("customer_key") % 10 === 0) else df.limit(5))
+    val slice = landed(df => if (df.columns.contains("customer_key"))
+      df.filter(col("customer_key") % 10 === 0) else df.limit(5))
     assert(slice == full, s"backfill slice changed counts: $full -> $slice")
   }
 

@@ -204,6 +204,25 @@ class RanksSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.maxRankCells")
   }
 
+  test("spark.graft.maxRankCells must be an integer >= 1, read in one place") {
+    assert(Ranks.cellCap(spark) === 4096)
+    try {
+      spark.conf.set("spark.graft.maxRankCells", "16")
+      assert(Ranks.cellCap(spark) === 16)
+      for (bad <- Seq("abc", "4.5", "0", "-3", "")) {
+        spark.conf.set("spark.graft.maxRankCells", bad)
+        val e = intercept[IllegalArgumentException](Ranks.cellCap(spark))
+        assert(e.getMessage.contains("spark.graft.maxRankCells"), e.getMessage)
+        // the operators that dispatch on the cap fail the same way
+        Seq[() => Any](() => operators.StatTests.spearmanCorr(spark, sfDir),
+            () => operators.Retrieval.quantileNormalize(spark, sfDir)).foreach { op =>
+          val eOp = intercept[IllegalArgumentException](op())
+          assert(eOp.getMessage.contains("spark.graft.maxRankCells"), eOp.getMessage)
+        }
+      }
+    } finally spark.conf.unset("spark.graft.maxRankCells")
+  }
+
   test("production Ranks call sites pass the monotone-cell validation") {
     // run representative operators (sum asc, max asc, desc bases, rank
     // cells) with the debug validation ON — a mis-derived bucket formula

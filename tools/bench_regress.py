@@ -12,7 +12,9 @@ either run's calibration spread (max/min of the three probes) exceeds
 1.5 the box was contended and regressions downgrade to WARN -- only
 queries whose plans actually changed are worth chasing from a
 contended sweep. Exit codes: 0 ok/warn-only, 1 real regressions on a
-quiet box, 2 queries disappeared from the map.
+quiet box (or an input with no 'queries' object), 2 queries disappeared
+from the map. An input may be a Bench JSON object or one wrapped as
+{"parsed": {...}}.
 """
 import json
 import math
@@ -27,8 +29,16 @@ SPREAD_OK = 1.5   # calibration max/min above this = contended box
 
 
 def load(path):
+    """The Bench object, unwrapped from {"parsed": {...}} (BENCH_r17.json's
+    shape); exits naming the file when there is no 'queries' object
+    (BENCH_r01.json's "parsed" is null)."""
     with open(path) as f:
-        return json.load(f)
+        doc = json.load(f)
+    if isinstance(doc, dict) and isinstance(doc.get("parsed"), dict):
+        doc = doc["parsed"]
+    if not isinstance(doc, dict) or not isinstance(doc.get("queries"), dict):
+        sys.exit(f"bench_regress: {path} has no 'queries' object")
+    return doc
 
 
 def spread(doc):

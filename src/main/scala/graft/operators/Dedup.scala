@@ -288,11 +288,11 @@ object Dedup {
   private[graft] def minhashPairsDf(documents: DataFrame): DataFrame =
     // eager checkpoint, NOT persist: the verify frame is read twice
     // inside this one plan, but a persist() here would outlive the call
-    // — the rolling ingestion (StreamingCuration.ingestBatch) builds a
-    // fresh pairs frame EVERY micro-batch, and CacheManager holds
-    // persisted plans by strong reference, so a long-running stream
-    // would accumulate cached frames without bound. Checkpoint blocks
-    // are GC-freed once the returned frame is unreachable.
+    // — CurationPipeline stage 3 builds a fresh pairs frame per run, and
+    // CacheManager holds persisted plans by strong reference until an
+    // explicit unpersist. Checkpoint blocks are GC-freed once the
+    // returned frame is unreachable. (The rolling ingestion bands its
+    // checkpointed batch itself and calls [[minhashPairsFrom]].)
     minhashPairsWithShingles(documents,
       graft.functions.Iterate.checkpoint(documents
         .select(col("doc_id"), TextOps.sortedShingles3(col("text")).as("sh"))
@@ -304,8 +304,18 @@ object Dedup {
     * here instead of shingling the corpus a second time.
     */
   private def minhashPairsWithShingles(
-      documents: DataFrame, shingles: DataFrame): DataFrame = {
-    val bands = graft.functions.Iterate.checkpoint(lshBandsDf(documents))
+      documents: DataFrame, shingles: DataFrame): DataFrame =
+    minhashPairsFrom(graft.functions.Iterate.checkpoint(lshBandsDf(documents)),
+      shingles)
+
+  /** The band self-join and Jaccard verify behind [[minhashPairsDf]],
+    * over already-computed `(doc_id, band_key)` bands and
+    * `(doc_id, sh, sz, ...)` shingles. `bands` is read twice, so callers
+    * pass a materialized frame (StreamingCuration.ingestBatch passes the
+    * micro-batch's one banding).
+    */
+  private[graft] def minhashPairsFrom(
+      bands: DataFrame, shingles: DataFrame): DataFrame = {
     val cand = bands.as("a")
       .join(bands.as("b"), col("a.band_key") === col("b.band_key")
         && col("a.doc_id") < col("b.doc_id"))

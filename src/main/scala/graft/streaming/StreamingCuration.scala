@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.TextOps
 import graft.operators.{Dedup, TextAnalysis}
 import graft.pipeline.CurationPipeline
 import graft.sources.Sinks
@@ -28,10 +29,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   2. quality gate (gopher rules — same predicate as the batch
   *      pipeline's stage 1);
   *   3. exact dedup vs the corpus: anti-join on the content-hash table;
-  *   4. near dedup: within-batch MinHash pair losers drop first, then
+  *   4. near dedup: the batch left by steps 1–3 is checkpointed once
+  *      with its verify shingles and banded once; within-batch MinHash
+  *      pair losers drop first (from those bands and shingles), then
   *      survivors probe the on-disk band index
   *      ([[CurationPipeline.probeLshIndex]] over the candidate-pruned
-  *      corpus slice);
+  *      corpus slice) with those bands minus the losers' rows;
   *   4b. SEMANTIC dedup (embedded corpora only — batches carrying an
   *      `embedding` column): survivors probe the standing
   *      [[graft.sources.AnnIndex]] lake table per micro-batch and drop
@@ -255,10 +258,17 @@ object StreamingCuration {
     * probe falls back to [[candidateDocs]]' distributed semi-join, so
     * the hot-key case costs a join, never a driver OOM or a
     * megaliteral IN predicate. Tunable per workload via
-    * `spark.graft.candidateIdCap`.
+    * `spark.graft.candidateIdCap`, default 10000: an integer with
+    * 0 ≤ cap < Int.MaxValue (0 forces the semi-join path). Anything
+    * else fails naming the key — a negative cap would collect no
+    * candidates and silently skip the verify.
     */
-  private def candidateIdCap(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.candidateIdCap", "10000").toInt
+  private[graft] def candidateIdCap(spark: SparkSession): Int = {
+    val raw = spark.conf.get("spark.graft.candidateIdCap", "10000")
+    raw.trim.toIntOption.filter(c => c >= 0 && c < Int.MaxValue)
+      .getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.candidateIdCap must be an integer in [0, ${Int.MaxValue}), got '$raw'"))
+  }
 
   /** Corpus slice holding the candidate indexed docs' text — a
     * DISTRIBUTED doc_id semi-join, the over-the-cap fallback exposed as
@@ -290,6 +300,8 @@ object StreamingCuration {
     */
   def ingestBatch(spark: SparkSession, batch: DataFrame,
       corpusPath: String, indexPath: String, batchId: Option[Long]): Long = {
+    // validated before any work, so a bad value fails with no job run
+    val cap = candidateIdCap(spark)
     val replayed: Option[Long] = batchId.flatMap { id =>
       readMarker(spark, corpusPath, s"committed-b$id").map { n =>
         // fully applied before (replay of a committed batch, or a crash
@@ -349,17 +361,28 @@ object StreamingCuration {
     // materialized on the driver and prunes via [[candidateDocs]]'
     // distributed semi-join instead — AQE picks the join strategy from
     // runtime sizes. Slower in the hot case, never a driver OOM.
-    val batchLosers = Dedup.minhashPairsDf(fresh)
-      .select(col("doc_b").as("doc_id")).distinct()
-    val batchClean = fresh.join(batchLosers, Seq("doc_id"), "left_anti")
+    //
+    // The batch is evaluated, shingled and banded ONCE: `freshSh`
+    // checkpoints steps 1–3 with the verify shingles riding along as
+    // helper columns, `freshBands` checkpoints its one banding, and every
+    // later frame derives from those two. Banding is per row, so the
+    // clean batch's bands are the batch's bands anti-joined with the
+    // losers — the key-collision probe, the index probe and the step-5
+    // index append all read that one frame.
+    val freshSh = graft.functions.Iterate.checkpoint(fresh
+      .withColumn("__ic_sh", TextOps.sortedShingles3(col("text")))
+      .withColumn("__ic_sz", size(col("__ic_sh"))))
+    val freshBands = graft.functions.Iterate.checkpoint(Dedup.lshBandsDf(freshSh))
+    val batchLosers = graft.functions.Iterate.checkpoint(Dedup
+      .minhashPairsFrom(freshBands, freshSh.select(col("doc_id"),
+        col("__ic_sh").as("sh"), col("__ic_sz").as("sz")))
+      .select(col("doc_b").as("doc_id")).distinct())
+    val batchClean = freshSh.drop("__ic_sh", "__ic_sz")
+      .join(batchLosers, Seq("doc_id"), "left_anti")
       .transform(graft.functions.PlanGuard.persist(_))
-    // the cleaned batch's band keys, computed AT MOST ONCE per
-    // micro-batch (lazy eager-checkpoint): the key-collision probe, the
-    // index probe, and the step-5 index append all read this frame —
-    // re-banding at each site would re-run the shingle+minhash
-    // expressions over the full batch text three times
+    // lazy: a batch with no index to probe and no survivor never reads it
     lazy val cleanBands = graft.functions.Iterate.checkpoint(
-      Dedup.lshBandsDf(batchClean))
+      freshBands.join(batchLosers, Seq("doc_id"), "left_anti"))
     val survivors =
       if (!hasIndex) batchClean
       else {
@@ -367,7 +390,6 @@ object StreamingCuration {
         val candIdFrame = Sinks.readParquet(spark, indexPath)
           .join(broadcast(batchKeys), Seq("band_key"))
           .select(col("doc_id")).distinct()
-        val cap = candidateIdCap(spark)
         // One bounded job: ≤ cap+1 ids ever reach the driver. Empty →
         // skip the verify pipeline entirely (collision-free batch, the
         // common case once the corpus stabilizes).
@@ -428,7 +450,7 @@ object StreamingCuration {
     val out = graft.functions.Iterate.checkpoint(semSurvivors)
     val n = out.count()
     // survivors ⊆ batchClean, so their band rows are a semi-join of
-    // the already-banded frame — never a third banding pass
+    // the already-banded frame — never a second banding pass
     def survivorBands = cleanBands
       .join(out.select(col("doc_id")), Seq("doc_id"), "left_semi")
     def survivorHashes = out.select(md5(col("text")).as("content_hash"))

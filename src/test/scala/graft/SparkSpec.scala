@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,6 +19,39 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "graft.RewriteIntersectCount")
     try f finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
+  /** Runs `f` and counts the Spark jobs it started: a listener records
+    * every job's description, and sentinel jobs before and after `f`
+    * bracket the ones `f` started (listener delivery is asynchronous
+    * but ordered).
+    */
+  def jobsOf[A](f: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def sentinel(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("jobs_of_start")
+      val out = f
+      sentinel("jobs_of_end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("jobs_of_end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val seen = jobs.toArray.toSeq.map(_.toString)
+      val (from, to) = (seen.indexOf("jobs_of_start"), seen.indexOf("jobs_of_end"))
+      assert(from >= 0 && to > from, s"sentinel jobs not observed: $seen")
+      (out, to - from - 1)
+    } finally sc.removeSparkListener(listener)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.StreamingCuration
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -14,6 +15,12 @@ case class StreamDoc(doc_id: Long, text: String, lang: String,
 
 class StreamingCurationSpec extends SparkSpec {
 
+  /** Jobs one ingest of the job-ceiling test's fixed batch may start:
+    * 32 with the batch evaluated once and banded once. Evaluating steps
+    * 1–3 again for each consumer of the batch runs 37.
+    */
+  private val JobCeiling = 32
+
   private def docRows() = {
     val docs = Tables.documents(spark, sfDir)
     val passing = docs.join(
@@ -24,6 +31,23 @@ class StreamingCurationSpec extends SparkSpec {
       StreamDoc(r.getAs[Long]("doc_id"), r.getAs[String]("text"),
         r.getAs[String]("lang"), r.getAs[String]("source"),
         r.getAs[Long]("n_chars")))
+  }
+
+  /** The side tables are what the corpus derives: the index is
+    * `Dedup.lshBandsDf(corpus)` and the hashes are `md5(text)` of the
+    * corpus, each as a multiset (counts plus `exceptAll` both ways).
+    */
+  private def assertSideTables(corpusPath: String, indexPath: String): Unit = {
+    val corpus = spark.read.parquet(corpusPath)
+    def same(name: String, got: DataFrame, want: DataFrame): Unit = {
+      assert(got.count() === want.count(), s"$name row count")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"$name differs from what the corpus derives")
+    }
+    same("index", spark.read.parquet(indexPath).select("doc_id", "band_key"),
+      operators.Dedup.lshBandsDf(corpus).select("doc_id", "band_key"))
+    same("hashes", spark.read.parquet(corpusPath + "_hashes"),
+      corpus.select(md5(col("text")).as("content_hash")))
   }
 
   test("streaming curation: standing-corpus dedup, index probe, replay absorption") {
@@ -43,6 +67,7 @@ class StreamingCurationSpec extends SparkSpec {
     // index covers exactly the corpus
     assert(spark.read.parquet(indexPath).select("doc_id").distinct().count()
       == corpus1.select("doc_id").distinct().count())
+    assertSideTables(corpusPath, indexPath)
 
     // Pick a genuinely-new doc: from the held-out rows, one that is
     // neither an exact copy nor a MinHash near-dup of anything already
@@ -53,8 +78,10 @@ class StreamingCurationSpec extends SparkSpec {
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct().collect().map(_.getLong(0)).toSet
     val corpusTexts = corpus1.select("text").collect().map(_.getString(0)).toSet
-    val fresh = rest.find(d => !pairedIds.contains(d.doc_id)
-      && !corpusTexts.contains(d.text)).get
+    val novel = rest.filter(d => !pairedIds.contains(d.doc_id)
+      && !corpusTexts.contains(d.text))
+    assert(novel.length >= 2, "need two held-out fresh docs")
+    val fresh = novel(0)
 
     val survivor = corpus1.orderBy(col("doc_id")).collect()
     // batch 2: an exact dup of a survivor (new id, same text), a near
@@ -81,6 +108,7 @@ class StreamingCurationSpec extends SparkSpec {
     assert(ids.contains(fresh.doc_id) && !ids.contains(90001L)
       && !ids.contains(90002L),
       "exact/near dup leaked into the corpus or the fresh doc was dropped")
+    assertSideTables(corpusPath, indexPath)
 
     // Replay: the same batch re-ingested is absorbed entirely (every
     // doc either already appended or already rejected against the same
@@ -89,6 +117,85 @@ class StreamingCurationSpec extends SparkSpec {
       corpusPath, indexPath)
     assert(n3 == 0, s"replayed batch appended $n3 docs")
     assert(spark.read.parquet(corpusPath).count() == corpus2.count())
+    assertSideTables(corpusPath, indexPath)
+
+    // batch 4: an IN-BATCH near-dup pair of a second novel doc — the
+    // higher id loses to the within-batch MinHash pass before the index
+    // probe, so it lands in no table
+    val keeper = novel(1)
+    val loser = StreamDoc(90003L, keeper.text + " tail tweak words", "en",
+      "srcX", 0L)
+    val batch4 = Seq(keeper, loser).toDF()
+    assert(operators.Dedup.minhashPairsDf(batch4).select("doc_a", "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      === Seq((keeper.doc_id, 90003L)), "batch 4 must hold one near-dup pair")
+    assert(operators.TextAnalysis.gopherRulesDf(batch4).filter(col("pass"))
+      .count() === 2L, "both batch-4 docs must pass the quality gate")
+    val n4 = StreamingCuration.ingestBatch(spark, batch4, corpusPath, indexPath)
+    assert(n4 == 1, s"only the pair's keeper should survive batch 4, got $n4")
+    val corpus4 = spark.read.parquet(corpusPath)
+    assert(corpus4.columns.toSeq === batch4.columns.toSeq,
+      "the corpus schema must stay the batch's schema")
+    assert(corpus4.filter(col("doc_id") === keeper.doc_id).count() === 1L)
+    assert(corpus4.filter(col("doc_id") === 90003L).isEmpty,
+      "in-batch near-dup loser landed in the corpus")
+    assert(spark.read.parquet(indexPath).filter(col("doc_id") === 90003L).isEmpty,
+      "in-batch near-dup loser landed in the index")
+    assert(spark.read.parquet(corpusPath + "_hashes")
+      .filter(col("content_hash") === md5(lit(loser.text))).isEmpty,
+      "in-batch near-dup loser landed in the hashes")
+    assertSideTables(corpusPath, indexPath)
+  }
+
+  test("streaming curation: one ingest of a fixed batch onto a standing " +
+      "corpus stays under its job ceiling") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_streamcur_jobs").toString
+    val corpusPath = s"$out/corpus"
+    val indexPath = s"$out/index"
+    val rows = docRows()
+    StreamingCuration.ingestBatch(spark, rows.take(20).toSeq.toDF(),
+      corpusPath, indexPath)
+    // ten new docs, an exact copy and a near copy of a corpus doc: every
+    // stage runs, the index probe collects candidates and verifies them
+    val base = spark.read.parquet(corpusPath).orderBy(col("doc_id"))
+      .select("text").head(2).map(_.getString(0))
+    val batch = (rows.slice(20, 30).toSeq ++ Seq(
+      StreamDoc(92001L, base(0), "en", "srcJ", 0L),
+      StreamDoc(92002L, base(1) + " tail tweak words", "en", "srcJ", 0L))).toDF()
+    val (n, jobs) = jobsOf(StreamingCuration.ingestBatch(spark, batch,
+      corpusPath, indexPath))
+    assert(n > 0 && n <= 10, s"survivors: $n")
+    assert(jobs <= JobCeiling, s"one ingest ran $jobs jobs (ceiling $JobCeiling)")
+  }
+
+  test("spark.graft.candidateIdCap must be an integer in [0, Int.MaxValue), " +
+      "read before any job") {
+    import spark.implicits._
+    val key = "spark.graft.candidateIdCap"
+    assert(StreamingCuration.candidateIdCap(spark) === 10000)
+    val out = Files.createTempDirectory("graft_streamcur_cap").toString
+    val batch = docRows().take(5).toSeq.toDF()
+    try {
+      for ((ok, want) <- Seq("0" -> 0, " 7 " -> 7,
+          "2147483646" -> (Int.MaxValue - 1))) {
+        spark.conf.set(key, ok)
+        assert(StreamingCuration.candidateIdCap(spark) === want)
+      }
+      for (bad <- Seq("-1", "2147483647", "9999999999", "abc", "4.5", "")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](
+          StreamingCuration.candidateIdCap(spark))
+        assert(e.getMessage.contains(key), e.getMessage)
+        val (eIngest, jobs) = jobsOf(intercept[IllegalArgumentException](
+          StreamingCuration.ingestBatch(spark, batch, s"$out/corpus",
+            s"$out/index")))
+        assert(eIngest.getMessage.contains(key), eIngest.getMessage)
+        assert(jobs === 0, s"cap '$bad' failed only after $jobs job(s)")
+      }
+    } finally spark.conf.unset(key)
+    assert(!new java.io.File(s"$out/corpus").exists(),
+      "a rejected cap must leave no table behind")
   }
 
   test("streaming curation: semantic probe — survivors checked against " +

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Sinks
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -184,28 +183,11 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a Tables load starts no Spark job") {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
+    val (_, jobs) = jobsOf {
       Tables.lineitem(spark, sfDir).schema
       Tables.events(spark, sfDir).schema
       Tables.documents(spark, sfDir).schema
-      // listener delivery is asynchronous but ordered: once the sentinel
-      // job is seen, every job the loads started has been seen too
-      sc.setJobDescription("tables_spec_sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains("tables_spec_sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(jobs.contains("tables_spec_sentinel"), "sentinel job never observed")
-      assert(jobs.size == 1, s"table loads started ${jobs.size - 1} job(s)")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"table loads started $jobs job(s)")
   }
 }
